@@ -156,45 +156,50 @@ object DeltaLakeSnapshots {
     Ivm.SignedDelta(q(sd.inserts), q(sd.retracts))
   }
 
-  /** Maintain a stored GROUPED-AGGREGATE view through a delete window by
-    * GROUP-SCOPED SPLICE — the rung shape that is exact for ANY
-    * deterministic aggregate (min/max/count-distinct included, which
-    * subtraction-merging can't retract):
+  /** Maintain a stored GROUPED-AGGREGATE view through a delete window —
+    * exact for ANY deterministic aggregate (min/max/count-distinct
+    * included, which subtraction-merging can't retract). The window's
+    * log ([[DeltaLake.window]]) picks the branch before any Spark job
+    * runs ([[LakeSplice]]):
     *
-    *   touched  = distinct `keys` of (inserts ∪ retracts)   — δ-sized
-    *   view'    = view ∖ touched  ∪  agg(snapshot ⋉ touched)
+    *   1. only `dataChange=false` actions and no `metaData` (compaction):
+    *      the stored view, unchanged — zero jobs;
+    *   2. rows(inserts) + rows(retracts) > rows(snapshot), counted from
+    *      `add.stats.numRecords` less deletion-vector cardinality: one
+    *      recompute, agg(prep(snapshot)) — the splice would read more;
+    *   3. otherwise the GROUP-SCOPED SPLICE:
+    *        touched  = distinct `keys` of (inserts ∪ retracts)   — δ-sized
+    *        view'    = view ∖ touched  ∪  agg(snapshot ⋉ touched)
     *
     * `keys` must be columns of the PREPPED rows that are also the
     * view's group-key output columns; `agg` maps prepped rows to the
     * view's shape. COMPUTED group keys (`md5(text) AS digest`) ride the
     * `prep` hook: a deterministic ROW-WISE derivation applied uniformly
     * to the signed frames and the snapshot (row-wise ops commute with
-    * the signed pair, so the touched-key set is exact). At 100 TB: `touched` is bounded
-    * by the window's churn and broadcast into both probes, so the only
-    * base-side read is the recompute arm — snapshot rows of the touched
-    * groups only, partition-pruned/stats-skipped when the keys align
-    * with the layout (here: keys ARE the partition columns, so the
-    * recompute arm plans only the touched partitions' files). The
-    * snapshot and the window resolve at ONE latest version (no TOCTOU
-    * between the diff and the recompute arm). The returned view′ is
-    * EAGER ([[LakeSplice]] pins it) and the cut advances only AFTER it
-    * materializes — a failed cycle never moves the cut past changes it
-    * hasn't applied.
+    * the signed pair, so the touched-key set is exact). At 100 TB:
+    * `touched` is bounded by the window's churn and inlined into both
+    * probes, so the only base-side read is the recompute arm — snapshot
+    * rows of the touched groups only, partition-pruned/stats-skipped
+    * when the keys align with the layout (keys that ARE the partition
+    * columns plan only the touched partitions' files). The snapshot and
+    * the window resolve at ONE latest version (no TOCTOU between the
+    * diff and the recompute arm). The returned view′ is materialized
+    * (the stored view itself on branch 1, an eager pin otherwise) and
+    * the cut advances only AFTER it exists — a failed cycle never moves
+    * the cut past changes it hasn't applied.
     */
   def maintainAgg(spark: SparkSession, table: String, view: DataFrame,
       keys: Seq[String], agg: DataFrame => DataFrame,
       prep: DataFrame => DataFrame = identity): DataFrame = {
     val s = stateOf(table)
     val latest = DeltaLake.latestVersion(spark, s.dir)
-    val ch = DeltaLake.changes(spark, s.dir, s.cutVersion.getOrElse(-1L),
-      Some(latest))
-    val snap = DeltaLake.snapshot(spark, s.dir, version = Some(latest))
-    // the splice result is EAGER, and the cut advances only after it
-    // materializes — a failed cycle must never move the cut past
-    // changes it hasn't applied (a retry would then diff an empty
-    // window and silently drop the delete forever)
-    val result = LakeSplice.maintainAgg(view, keys, agg,
-      prep(ch.inserts), prep(ch.retracts), prep(snap))
+    val window = DeltaLake.window(spark, s.dir,
+      s.cutVersion.getOrElse(-1L), Some(latest))
+    // the result is materialized, and the cut advances only after it
+    // exists — a failed cycle must never move the cut past changes it
+    // hasn't applied (a retry would then diff an empty window and
+    // silently drop the delete forever)
+    val result = LakeSplice.maintainAgg(view, keys, agg, prep, window)
     advanceTo(spark, table, latest)
     result
   }

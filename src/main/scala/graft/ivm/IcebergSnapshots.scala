@@ -106,25 +106,32 @@ object IcebergSnapshots {
     Ivm.SignedDelta(q(sd.inserts), q(sd.retracts))
   }
 
-  /** Group-scoped splice through a delete window — identical contract to
-    * [[DeltaLakeSnapshots.maintainAgg]] (shared [[LakeSplice]] body):
-    * recompute ONLY the groups touched by either signed frame from the
-    * snapshot (exact for any deterministic aggregate), splice into the
-    * stored view. One resolved snapshot serves the diff, the recompute
-    * arm, AND the cut advance — which happens only after the eager
-    * result materializes.
+  /** Maintain a grouped-aggregate view through a delete window —
+    * identical contract to [[DeltaLakeSnapshots.maintainAgg]] (shared
+    * [[LakeSplice]] body), with the branch read from the snapshot
+    * metadata ([[Iceberg.window]]) before any Spark job runs:
+    *
+    *   1. every snapshot in the window is a `replace` (compaction) under
+    *      an unchanged schema: the stored view, unchanged — zero jobs;
+    *   2. rows(inserts) + rows(retracts) > rows(snapshot), counted from
+    *      the manifests' `record_count` (no delete files at either end):
+    *      one recompute, agg(prep(snapshot));
+    *   3. otherwise the group-scoped splice — recompute ONLY the groups
+    *      touched by either signed frame from the snapshot and splice
+    *      them into the stored view.
+    *
+    * One resolved snapshot serves the diff, the recompute arm, AND the
+    * cut advance — which happens only after the result is materialized.
     */
   def maintainAgg(spark: SparkSession, table: String, view: DataFrame,
       keys: Seq[String], agg: DataFrame => DataFrame,
       prep: DataFrame => DataFrame = identity): DataFrame = {
     val s = stateOf(table)
     val latest = Iceberg.currentSnapshotId(s.dir)
-    val ch = Iceberg.changes(spark, s.dir, s.cutSnapshot.getOrElse(
+    val window = Iceberg.window(spark, s.dir, s.cutSnapshot.getOrElse(
       throw new IllegalStateException(
         s"IcebergSnapshots: '$table' has no cut snapshot")), Some(latest))
-    val snap = Iceberg.snapshot(spark, s.dir, snapshotId = Some(latest))
-    val result = LakeSplice.maintainAgg(view, keys, agg,
-      prep(ch.inserts), prep(ch.retracts), prep(snap))
+    val result = LakeSplice.maintainAgg(view, keys, agg, prep, window)
     advanceTo(spark, table, latest)
     result
   }

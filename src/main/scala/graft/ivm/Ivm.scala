@@ -174,7 +174,7 @@ object Ivm {
     GraftSql.ofRows(df.sparkSession,
       PosDeltaRule.freshInstance(GraftSql.analyzed(df)))
 
-  /** Eagerly pin a DELTA-SIZED intermediate (δ partials, affected-group
+  /** Pin a DELTA-SIZED intermediate (δ partials, affected-group
     * views, signed net inputs) so frames the rungs reference several times
     * execute ONCE instead of once per plan occurrence — exchange reuse is
     * deliberately not trusted here (see [[signedNet]]'s netting comment),
@@ -190,9 +190,12 @@ object Ivm {
     * keys) approach corpus size — there the pin trades memory for the
     * guaranteed-once execution, and the rung itself is the wrong choice
     * anyway (differencing wins when the delta spans most keys, which is
-    * why maintainAuto keeps both). Note also that pinning makes the
-    * rung-building APIs (deltaKeyScoped/maintainAuto) run cluster jobs
-    * at CONSTRUCTION time, not first consumption. Callers can disable
+    * why maintainAuto keeps both). The pin is a LAZY `localCheckpoint`,
+    * but under AQE building it still runs the pinned subplan's
+    * shuffle-stage jobs: the rung-building APIs
+    * (deltaKeyScoped/maintainAuto) execute those at CONSTRUCTION time,
+    * and only the final stage waits for the first consuming job (AQE
+    * off, construction only plans). Callers can disable
     * via `spark.graft.ivm.pinSignedNet=false` — tests do, to audit the
     * full LAZY maintenance plan (pinning would execute the interesting
     * subtrees at construction time, leaving only RDD scans to inspect).
@@ -205,10 +208,11 @@ object Ivm {
       // blow up its constraint rewrite (see GraftSql.normalizeRddConstraints).
       // LAZY checkpoint (guide §2.4/§5): same LogicalRDD leaf (the
       // guaranteed-once execution and plan-cut are unchanged — the RDD is
-      // computed once and cached at first use), but without one standalone
-      // barrier job per pin: the group-scoped/two-level rungs ran 20–30
-      // sequential eager-pin micro-jobs per cycle, ~2.5 s of delta_minmax's
-      // 4.0 s warm pass in the r18 profile, pure job-launch fixed cost
+      // computed once and cached at first use), but without the eager
+      // pin's final-stage barrier job: the group-scoped/two-level rungs ran
+      // 20–30 sequential eager-pin micro-jobs per cycle, ~2.5 s of
+      // delta_minmax's 4.0 s warm pass in the r18 profile. Under AQE the
+      // subplan's shuffle stages still run here, when the RDD is built
       graft.engine.Labeled.job(df.sparkSession, "ivm:pin") {
         GraftSql.normalizeRddConstraints(df.localCheckpoint(false))
       }

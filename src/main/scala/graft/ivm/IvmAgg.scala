@@ -296,6 +296,12 @@ object IvmAgg {
     * one group (SQL GROUP BY semantics). Computed through
     * [[alignByKeys]]'s union + single hash aggregate instead of a
     * full-outer join — same rows, one exchange instead of two.
+    *
+    * Precondition (unchecked): `view` and `delta.partial` each hold AT
+    * MOST ONE row per key — the shape of a grouped aggregate on `keys`.
+    * [[alignByKeys]] recovers each side's value with `first(ignoreNulls)`,
+    * so a side with duplicate keys collapses them to one arbitrary row
+    * SILENTLY, where the full-outer join it replaced kept every row.
     */
   def merge(view: DataFrame, delta: AggDelta): DataFrame = {
     val keys = delta.keys

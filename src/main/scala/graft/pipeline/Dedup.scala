@@ -352,17 +352,16 @@ object Dedup {
     // round 0 fused into initialization: label = min(self, direct
     // neighbors) — one aggregation replaces the distinct AND the first
     // propagation round (plus its convergence check).
-    // Each round's frame is materialized by an EAGER localCheckpoint, not
-    // persist: the label frame is referenced THREE times per round (self,
-    // neighbor-min, pointer lookup), so a lazy cached lineage would grow
-    // 3^rounds plan nodes — checkpointing truncates to a LogicalRDD and
-    // keeps the per-round plan (and codegen time) constant. Superseded
-    // rounds' blocks are freed by the ContextCleaner once unreferenced;
-    // the returned frame is re-persisted explicitly so the caller's
-    // unpersist has its usual effect.
-    // lazy checkpoints throughout the loop: each round's convergence
-    // check (a full-frame aggregate) is the materializing action, so the
-    // eager pin's standalone job per round was a pure extra barrier
+    // Each round's frame is a localCheckpoint, not persist: the label
+    // frame is referenced THREE times per round (self, neighbor-min,
+    // pointer lookup), so a cached lineage would grow 3^rounds plan nodes
+    // — checkpointing truncates to a LogicalRDD and keeps the per-round
+    // plan (and codegen time) constant. The checkpoints are LAZY: under
+    // AQE building one runs the round's shuffle stages, and the round's
+    // convergence check (a full-frame aggregate) runs the final stage and
+    // caches the blocks — an eager pin's standalone job per round was a
+    // pure extra barrier. Superseded rounds' blocks are dropped by
+    // `unpinNow` as soon as the next round is materialized.
     var labels = edges.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("label"))
       .select(col("a").as("id"), col("label"))
@@ -428,10 +427,11 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds — the " +
           "pair graph has a longer chain than expected; raise maxIter")
     }
-    // the final round's frame is ALREADY materialized (eager
-    // localCheckpoint) — returning it directly avoids a second cached
-    // copy. (The previous extra persist() was a per-execution block leak
-    // for callers that never unpersist — e.g. the declared query run
+    // the final round's frame is ALREADY materialized (its lazy
+    // checkpoint was filled by the last convergence check) — returning
+    // it directly avoids a second cached copy. (The previous extra
+    // persist() was a per-execution block leak for callers that never
+    // unpersist — e.g. the declared query run
     // repeatedly by the bench — and showed up as multi-second run-to-run
     // variance while the ContextCleaner caught up. Checkpoint blocks are
     // freed when the frame is garbage-collected, same as every other

@@ -61,6 +61,14 @@ object DeltaLake {
       * the newly-deleted rows instead of cancelling by path.
       */
     def identity: (String, Option[String]) = (path, dv.map(_.id))
+
+    /** Live rows per the log: `stats.numRecords` less the deletion
+      * vector's cardinality; None when the writer recorded no count.
+      */
+    def rows: Option[Long] = stats
+      .flatMap(s => Option(M.readTree(s).get("numRecords")))
+      .filter(_.canConvertToLong).map(_.asLong)
+      .map(_ - dv.map(_.cardinality).getOrElse(0L))
   }
 
   /** One add/remove action's file fields from commit JSON (shared by the
@@ -401,7 +409,19 @@ object DeltaLake {
     *     nor window-added: the log contradicts itself.
     */
   def changes(spark: SparkSession, path: String, afterVersion: Long,
-      toVersion: Option[Long] = None): Changes = {
+      toVersion: Option[Long] = None): Changes =
+    window(spark, path, afterVersion, toVersion).changes
+
+  /** The window `(afterVersion, toVersion]` behind [[changes]], resolved
+    * from the log alone (see [[ChangeWindow]]): the same commit walk and
+    * fail-fast guards, plus whether the window is NEUTRAL — no add or
+    * remove with `dataChange=true`, no `cdc` and no `metaData` action —
+    * and the frames' and end snapshot's row counts from `add.stats`.
+    * A window with change files states no frame count (the files mix
+    * change types).
+    */
+  def window(spark: SparkSession, path: String, afterVersion: Long,
+      toVersion: Option[Long] = None): ChangeWindow = {
     val end = toVersion.getOrElse(latestVersion(spark, path))
     val endState = replay(spark, path, Some(end))
     // keyed by FILE-VERSION IDENTITY (path, dv id), not path: a
@@ -427,6 +447,7 @@ object DeltaLake {
     // (its rows leave: retract)
     val cdcRemoved = mutable.Set.empty[Id]
     val cdcAdded = mutable.LinkedHashMap.empty[Id, AddFile]
+    var neutral = true
     (afterVersion.max(-1L) + 1 to end).foreach { v =>
       // CHANGE DATA FEED: a commit carrying `cdc` actions describes its
       // own row-level diff in dedicated change files (`_change_data/`,
@@ -463,6 +484,9 @@ object DeltaLake {
         }
       }
       commitNodes.foreach { n =>
+        if (commitCdc.nonEmpty || Option(n.get("metaData")).nonEmpty ||
+            Seq("add", "remove").exists(a =>
+              Option(n.get(a)).exists(dataChange))) neutral = false
         // schema drift only matters against a STORED view built at the
         // cut; a from-scratch window (afterVersion < 0) has none, and its
         // frames resolve at the end schema like any snapshot
@@ -528,14 +552,23 @@ object DeltaLake {
         }
       }
     }
-    val base = Changes(readFiles(spark, path, endState, ins.values.toSeq),
-      readFiles(spark, path, endState, rets.values.toSeq))
-    if (cdcFiles.isEmpty) base
-    else Changes(
-      base.inserts.unionByName(readCdc(spark, path, endState,
-        cdcFiles.toSeq, Seq("insert", "update_postimage"))),
-      base.retracts.unionByName(readCdc(spark, path, endState,
-        cdcFiles.toSeq, Seq("delete", "update_preimage"))))
+    def frames: Changes = {
+      val base = Changes(readFiles(spark, path, endState, ins.values.toSeq),
+        readFiles(spark, path, endState, rets.values.toSeq))
+      if (cdcFiles.isEmpty) base
+      else Changes(
+        base.inserts.unionByName(readCdc(spark, path, endState,
+          cdcFiles.toSeq, Seq("insert", "update_postimage"))),
+        base.retracts.unionByName(readCdc(spark, path, endState,
+          cdcFiles.toSeq, Seq("delete", "update_preimage"))))
+    }
+    new ChangeWindow(neutral,
+      changeFileRows =
+        if (cdcFiles.nonEmpty) Iterator(None)
+        else (ins.values ++ rets.values).iterator.map(_.rows),
+      snapshotFileRows = endState.adds.iterator.map(_.rows),
+      changesOf = frames,
+      snapshotOf = readFiles(spark, path, endState, endState.adds))
   }
 
   /** Read change files (`cdc` actions) filtered to the given
@@ -1476,7 +1509,7 @@ object DeltaLake {
   /** Per-file column stats → the protocol's add.stats JSON (numRecords +
     * min/maxValues over orderable primitive data columns), computed in
     * ONE job over the given files grouped by the hidden file name — this
-    * is what log-level data skipping reads. Keyed by file NAME.
+    * is what log-level data skipping reads. Keyed by absolute path.
     */
   private def fileStats(spark: SparkSession, dataSchema: StructType,
       paths: Seq[String]): Map[String, String] = {

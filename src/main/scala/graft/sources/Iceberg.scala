@@ -82,7 +82,7 @@ object Iceberg {
       stats: Option[String] = None, size: Option[Long] = None,
       content: Int = 0, seq: Long = 0L, equalityIds: Seq[Int] = Seq.empty,
       dvRef: Option[Puffin.DvRef] = None,
-      format: String = "PARQUET") {
+      format: String = "PARQUET", records: Option[Long] = None) {
     /** Identity of one DELETE-FILE instance for window diffs: a plain
       * delete file is its path, but several DV blobs share one Puffin
       * path — a DV's identity is (path, blob offset). A REWRITTEN DV
@@ -520,7 +520,9 @@ object Iceberg {
               decodeBounds(optF(df, "lower_bounds"), idMap),
               decodeBounds(optF(df, "upper_bounds"), idMap))
             files.put(fp, IceFile(fp, pv, stats, size, 0, seq,
-              format = fmt.toUpperCase))
+              format = fmt.toUpperCase,
+              records = Option(optF(df, "record_count"))
+                .map(_.toString.toLong)))
           }
         }
       }
@@ -647,9 +649,70 @@ object Iceberg {
     * a vacuumed delete file fails loudly at the parquet read).
     */
   def changes(spark: SparkSession, path: String, afterSnapshotId: Long,
-      toSnapshotId: Option[Long] = None): DeltaLake.Changes = {
-    val cut = resolve(spark, path, Some(afterSnapshotId))
-    val end = resolve(spark, path, toSnapshotId)
+      toSnapshotId: Option[Long] = None): DeltaLake.Changes =
+    diff(spark, path, resolve(spark, path, Some(afterSnapshotId)),
+      resolve(spark, path, toSnapshotId))
+
+  /** The window `(afterSnapshotId, toSnapshotId]` behind [[changes]],
+    * resolved from metadata alone (see [[ChangeWindow]]). NEUTRAL when
+    * every snapshot on the end's parent chain back to the cut has
+    * operation `replace` (the spec's content-preserving rewrite) and the
+    * snapshot schema-id is unchanged — a window that is not one lineage
+    * is never neutral. Row counts are the manifests' `record_count`s and
+    * are stated only while neither end holds delete files.
+    */
+  def window(spark: SparkSession, path: String, afterSnapshotId: Long,
+      toSnapshotId: Option[Long] = None): ChangeWindow = {
+    val endId = toSnapshotId.getOrElse(currentSnapshotId(path))
+    lazy val cut = resolve(spark, path, Some(afterSnapshotId))
+    lazy val end = resolve(spark, path, Some(endId))
+    new ChangeWindow(replaceOnly(path, afterSnapshotId, endId),
+      changeFileRows =
+        if (cut.deleteFiles.nonEmpty || end.deleteFiles.nonEmpty)
+          Iterator(None)
+        else {
+          val (cutPaths, endPaths) =
+            (cut.files.map(_.path).toSet, end.files.map(_.path).toSet)
+          (end.files.filterNot(f => cutPaths.contains(f.path)) ++
+            cut.files.filterNot(f => endPaths.contains(f.path)))
+            .iterator.map(_.records)
+        },
+      snapshotFileRows =
+        if (end.deleteFiles.nonEmpty) Iterator(None)
+        else end.files.iterator.map(_.records),
+      changesOf = diff(spark, path, cut, end),
+      snapshotOf = scanOf(spark, path, end))
+  }
+
+  /** Whether `(afterSnapshotId, toSnapshotId]` is one lineage of
+    * `replace` snapshots under an unchanged schema-id — one metadata
+    * read, no manifest I/O.
+    */
+  private def replaceOnly(path: String, afterSnapshotId: Long,
+      toSnapshotId: Long): Boolean = {
+    val snaps = Option(readMetadata(path).get("snapshots")).toSeq
+      .flatMap(_.elements().asScala.toSeq)
+      .map(n => n.get("snapshot-id").asLong -> n).toMap
+    def field(id: Long, f: String): Option[JsonNode] =
+      snaps.get(id).flatMap(n => Option(n.get(f))).filterNot(_.isNull)
+    @annotation.tailrec
+    def replacesBackToCut(id: Long): Boolean =
+      id == afterSnapshotId || (field(id, "summary")
+        .flatMap(s => Option(s.get("operation"))).map(_.asText)
+        .contains("replace") && (field(id, "parent-snapshot-id") match {
+          case Some(p) => replacesBackToCut(p.asLong)
+          case None => false
+        }))
+    toSnapshotId == afterSnapshotId ||
+      (replacesBackToCut(toSnapshotId) &&
+        field(toSnapshotId, "schema-id").map(_.asInt).exists(sid =>
+          field(afterSnapshotId, "schema-id").map(_.asInt).contains(sid)))
+  }
+
+  /** The signed diff between two resolved snapshots (see [[changes]]). */
+  private def diff(spark: SparkSession, path: String, cut: SnapshotMeta,
+      end: SnapshotMeta): DeltaLake.Changes = {
+    val afterSnapshotId = cut.snapshotId
     require(cut.schema.json == end.schema.json,
       s"Iceberg.changes: snapshots ($afterSnapshotId, ${end.snapshotId}] " +
         "of " + path + " change the schema: a signed diff under an " +
