@@ -920,9 +920,10 @@ object Queries {
         val ev = t(s, d, "events")
           .select("user_id", "event_id", "ts", "value")
         val sd = Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
-        sd.inserts.localCheckpoint().withColumn("sign", lit(1L))
-          .unionByName(
-            sd.retracts.localCheckpoint().withColumn("sign", lit(-1L)))
+        Pins.pin(sd.inserts, "ivm:keyscoped-pin", eager = true)
+          .withColumn("sign", lit(1L))
+          .unionByName(Pins.pin(sd.retracts, "ivm:keyscoped-pin",
+            eager = true).withColumn("sign", lit(-1L)))
           .orderBy("user_id", "event_id", "sign")
       },
       Some("""WITH e AS (

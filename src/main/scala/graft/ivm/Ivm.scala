@@ -3,6 +3,8 @@ package graft.ivm
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.graft.GraftSql
 
+import graft.engine.Pins
+
 /** Public API for incremental view maintenance (the reference's novel
   * capability, `src/delta_node.rs` + `src/optimizer_rules/mod.rs`).
   *
@@ -12,6 +14,21 @@ import org.apache.spark.sql.graft.GraftSql
   * standard operators, so the full Catalyst optimizer (pushdown, pruning,
   * join selection, AQE) runs on it — unlike the reference, whose tests run
   * the custom rule *instead of* the stock optimizer.
+  *
+  * The signed rungs pin (`Pins.pin(_, "ivm:pin")`) every DELTA-SIZED
+  * intermediate they reference several times — δ partials, affected-group
+  * views, the signed net — so it executes ONCE instead of once per plan
+  * occurrence: exchange reuse is deliberately not trusted here (see
+  * [[signedNet]]), so without pins a cycle's cost is multiplicative in how
+  * often a subplan is inlined (measured 2–4× on the agg-join and two-level
+  * rungs). The materialization is the delta's own size, and matches
+  * production, where partials and view probes are materialized state. ONE
+  * caller stretches "delta-sized": the key-scoped rung's net is over
+  * affected-KEY restricted full/base recomputes, which under broad-key
+  * churn approach corpus size — differencing is the right rung there, which
+  * is why maintainAuto keeps both. Under AQE building a pin runs its
+  * subplan's shuffle stages, so deltaKeyScoped/maintainAuto execute those
+  * at construction time.
   */
 object Ivm {
 
@@ -120,7 +137,7 @@ object Ivm {
   final case class SignedDelta(inserts: DataFrame, retracts: DataFrame) {
 
     /** The blessed application: `(view ∪all inserts) ∖all retracts`, with
-      * BOTH delta frames pinned (eager `localCheckpoint`) first.
+      * BOTH delta frames pinned (lazy [[graft.engine.Pins.pin]]) first.
       *
       * Composing the two lazy frames directly into one query can return
       * wrong results on Spark 4.1: with `spark.sql.exchange.reuse` (default
@@ -141,15 +158,11 @@ object Ivm {
       // joins emit key-first order, which need not match the view's)
       val cols = view.columns.toSeq
         .map(org.apache.spark.sql.functions.col)
-      // LAZY checkpoint (guide §2.4/§5 — fewer driver barriers): the plan
-      // is cut to a LogicalRDD leaf at construction exactly as before
+      // lazy pins: the plan is cut to a LogicalRDD leaf at construction
       // (which is what defuses the exchange-reuse hazard documented
-      // above), but materialization happens inside the first consuming
-      // job instead of one standalone barrier job per pin
-      graft.engine.Labeled.job(view.sparkSession, "ivm:applyTo-pin") {
-        view.unionByName(inserts.localCheckpoint(false).select(cols: _*))
-          .exceptAll(retracts.localCheckpoint(false).select(cols: _*))
-      }
+      // above); the rows are materialized inside the first consuming job
+      view.unionByName(Pins.pin(inserts, "ivm:applyTo-pin").select(cols: _*))
+        .exceptAll(Pins.pin(retracts, "ivm:applyTo-pin").select(cols: _*))
     }
   }
 
@@ -173,50 +186,6 @@ object Ivm {
   private def reMint(df: DataFrame): DataFrame =
     GraftSql.ofRows(df.sparkSession,
       PosDeltaRule.freshInstance(GraftSql.analyzed(df)))
-
-  /** Pin a DELTA-SIZED intermediate (δ partials, affected-group
-    * views, signed net inputs) so frames the rungs reference several times
-    * execute ONCE instead of once per plan occurrence — exchange reuse is
-    * deliberately not trusted here (see [[signedNet]]'s netting comment),
-    * so without pinning the maintenance cycle's cost is multiplicative in
-    * how often a subplan is inlined (measured 2–4× on the agg-join and
-    * two-level rungs). Every pinned frame is |touched-groups|- or
-    * |delta|-sized by design — the materialization is the delta's own
-    * size, the same rationale as [[SignedDelta.applyTo]], and matches
-    * production, where partials and view probes are materialized state.
-    * ONE caller stretches the "delta-sized" rationale: the key-scoped
-    * rung's [[signedNet]] inputs are affected-KEY restricted full/base
-    * recomputes, which under broad-key churn (a delta touching most
-    * keys) approach corpus size — there the pin trades memory for the
-    * guaranteed-once execution, and the rung itself is the wrong choice
-    * anyway (differencing wins when the delta spans most keys, which is
-    * why maintainAuto keeps both). The pin is a LAZY `localCheckpoint`,
-    * but under AQE building it still runs the pinned subplan's
-    * shuffle-stage jobs: the rung-building APIs
-    * (deltaKeyScoped/maintainAuto) execute those at CONSTRUCTION time,
-    * and only the final stage waits for the first consuming job (AQE
-    * off, construction only plans). Callers can disable
-    * via `spark.graft.ivm.pinSignedNet=false` — tests do, to audit the
-    * full LAZY maintenance plan (pinning would execute the interesting
-    * subtrees at construction time, leaving only RDD scans to inspect).
-    */
-  private def pinSmall(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.ivm.pinSignedNet", "true").toBoolean)
-      // constraint normalization: a raw checkpoint leaf re-minted by
-      // [[reMint]] can carry STALE constraint ExprIds into a Union and
-      // blow up its constraint rewrite (see GraftSql.normalizeRddConstraints).
-      // LAZY checkpoint (guide §2.4/§5): same LogicalRDD leaf (the
-      // guaranteed-once execution and plan-cut are unchanged — the RDD is
-      // computed once and cached at first use), but without the eager
-      // pin's final-stage barrier job: the group-scoped/two-level rungs ran
-      // 20–30 sequential eager-pin micro-jobs per cycle, ~2.5 s of
-      // delta_minmax's 4.0 s warm pass in the r18 profile. Under AQE the
-      // subplan's shuffle stages still run here, when the RDD is built
-      graft.engine.Labeled.job(df.sparkSession, "ivm:pin") {
-        GraftSql.normalizeRddConstraints(df.localCheckpoint(false))
-      }
-    else df
 
   /** Signed delta of a LEFT OUTER join under insert-only source deltas —
     * the case the append-only rewrite correctly refuses (see
@@ -445,7 +414,7 @@ object Ivm {
   def groupTopKMerge(prev: DataFrame, deltaRows: DataFrame,
       keys: Seq[String], order: Seq[Column], k: Int): DataFrame = {
     import org.apache.spark.sql.{functions => F}
-    val dTop = pinSmall(groupTopK(deltaRows, keys, order, k))
+    val dTop = Pins.pin(groupTopK(deltaRows, keys, order, k), "ivm:pin")
     // every reuse beyond the first gets its own ExprIds ([[signed]]'s
     // hazard): prev feeds both split arms and dTop feeds both touched-key
     // sets plus the merge union — with pinning disabled (or a lazy caller
@@ -477,16 +446,16 @@ object Ivm {
       order: Seq[Column], k: Int): SignedDelta = {
     import org.apache.spark.sql.{functions => F}
     val src = source.toDF()
-    val dTop = pinSmall(groupTopK(delta(src), keys, order, k))
+    val dTop = Pins.pin(groupTopK(delta(src), keys, order, k), "ivm:pin")
     val touched =
       F.broadcast(reMint(dTop).select(keys.map(F.col): _*).distinct())
     // re-project the semi-join's key-first column order back to the
     // source's, so the signed frames difference positionally against any
     // view derived from the source (applyTo / the identity spec)
     val outCols = src.columns.toSeq.map(F.col)
-    val affected = pinSmall(groupTopK(
+    val affected = Pins.pin(groupTopK(
       baseOf(src).join(touched, keys, "left_semi"), keys, order, k)
-      .select(outCols: _*))
+      .select(outCols: _*), "ivm:pin")
     val merged = groupTopK(reMint(affected).unionByName(dTop), keys, order, k)
     signedNet(merged, reMint(affected))
   }
@@ -518,8 +487,8 @@ object Ivm {
     val ad0 = IvmAgg.deltaPartial(q)
     // the δ partial feeds both the affected-key probe and the merge; the
     // affected view feeds both signed frames — pin each once
-    val ad = ad0.copy(partial = pinSmall(ad0.partial))
-    val affected = pinSmall(
+    val ad = ad0.copy(partial = Pins.pin(ad0.partial, "ivm:pin"))
+    val affected = Pins.pin(
       if (ad.keys.isEmpty) view // global aggregate: the single row
       else {
         val affKeys = reMint(ad.partial.select(ad.keys.map(k =>
@@ -527,7 +496,7 @@ object Ivm {
         val cond = ad.keys.map(k => col(k) <=> col(s"__aff_$k"))
           .reduce(_ && _)
         view.join(broadcast(affKeys), cond, "left_semi")
-      })
+      }, "ivm:pin")
     signedNet(IvmAgg.merge(affected, ad), reMint(affected))
   }
 
@@ -588,46 +557,24 @@ object Ivm {
     def replicate(df: DataFrame, n: Column): DataFrame =
       df.withColumn("__graft_i", F.explode(F.sequence(F.lit(1L), n)))
         .select(cols.map(F.col): _*)
-    val pinOn = plus.sparkSession.conf
-      .get("spark.graft.ivm.pinSignedNet", "true").toBoolean
-    if (pinOn) {
-      // ONE net aggregation for both directions (guide §2.4): the net
-      // frame is pinned to a LogicalRDD leaf, so inserts (`net > 0`) and
-      // retracts (`net < 0`, replicated −net times) are two filters over
-      // the SAME materialized RDD — the exchange-reuse hazard documented
-      // in the else-branch cannot arise (one leaf, not two canonically
-      // identical aggregate subtrees), and the netting runs one
-      // aggregation over |plus|+|minus| rows instead of two. The inputs
-      // are each referenced once, so they no longer need their own pins
-      // (previously: two input pins + two aggregations per signedNet).
-      val net0 = pinSmall(tag(plus, 1L).unionByName(tag(minus, -1L))
-        .groupBy(cols.map(F.col): _*)
-        .agg(F.sum(F.col("__graft_sign")).as("__graft_net")))
-      signed(
-        replicate(net0.filter(F.col("__graft_net") > 0),
-          F.col("__graft_net")),
-        replicate(net0.filter(F.col("__graft_net") < 0),
-          -F.col("__graft_net")))
-    } else {
-      // pinning disabled (tests/Explain auditing the lazy algebra): each
-      // direction gets its OWN net aggregation with its own sign
-      // orientation and an identical `> 0` consumer — so the inserts and
-      // retracts plans are NOT canonicalization-equal. With one shared
-      // orientation and `> 0` / `< 0` filters, Spark's exchange reuse
-      // (spark.sql.exchange.reuse, default on) collided the two arms'
-      // canonically identical aggregate subtrees when a caller composed
-      // both frames into one query, and the retract side returned the
-      // wrong rows (observed: a windowed key-scoped delta's
-      // `inserts ∪ retracts` emitted base rows that net to zero;
-      // disabling exchange reuse fixed it).
-      def net(pos: DataFrame, neg: DataFrame): DataFrame =
-        tag(pos, 1L).unionByName(tag(neg, -1L))
-          .groupBy(cols.map(F.col): _*)
-          .agg(F.sum(F.col("__graft_sign")).as("__graft_net"))
-          .filter(F.col("__graft_net") > 0)
-      signed(replicate(net(plus, minus), F.col("__graft_net")),
-        replicate(net(minus, plus), F.col("__graft_net")))
-    }
+    // ONE net aggregation for both directions (guide §2.4), pinned to a
+    // LogicalRDD leaf: inserts (`net > 0`) and retracts (`net < 0`,
+    // replicated −net times) are two filters over the SAME materialized
+    // RDD. The same two filters over an UNPINNED aggregation are two
+    // canonically identical aggregate subtrees, and Spark's exchange
+    // reuse (spark.sql.exchange.reuse, default on) collided them when a
+    // caller composed both frames into one query: the retract side
+    // returned the wrong rows (observed: a windowed key-scoped delta's
+    // `inserts ∪ retracts` emitted base rows that net to zero; disabling
+    // exchange reuse fixed it). The netting runs one aggregation over
+    // |plus|+|minus| rows, and the inputs are each referenced once, so
+    // they need no pins of their own.
+    val net0 = Pins.pin(tag(plus, 1L).unionByName(tag(minus, -1L))
+      .groupBy(cols.map(F.col): _*)
+      .agg(F.sum(F.col("__graft_sign")).as("__graft_net")), "ivm:pin")
+    signed(
+      replicate(net0.filter(F.col("__graft_net") > 0), F.col("__graft_net")),
+      replicate(net0.filter(F.col("__graft_net") < 0), -F.col("__graft_net")))
   }
 
   private def requireKeyDecomposable(
@@ -945,11 +892,11 @@ object Ivm {
         // the sign-weighted partial feeds the affected-key probe, the
         // merge, and (via pKeys) the retract frame — pin once; it is
         // |touched-groups|-sized by construction
-        val partial = pinSmall(
+        val partial = Pins.pin(
           childSd.inserts.withColumn("__graft_w", lit(1L))
             .unionByName(childSd.retracts.withColumn("__graft_w", lit(-1L)))
             .groupBy(keyCols: _*)
-            .agg(weighted.head, weighted.tail: _*))
+            .agg(weighted.head, weighted.tail: _*), "ivm:pin")
 
         // the maintained view (base recompute stands in for the stored
         // view, as in deltaAgg) probed by the touched-group keys
@@ -959,7 +906,8 @@ object Ivm {
         val affCond = keyNames.map(k => col(k) <=> col(s"__aff_$k"))
           .reduce(_ && _)
         val affected =
-          pinSmall(view.join(broadcast(pKeys), affCond, "left_semi"))
+          Pins.pin(view.join(broadcast(pKeys), affCond, "left_semi"),
+            "ivm:pin")
 
         // view ⊕ P groupwise through the one-exchange key-aligned combine
         // (IvmAgg.alignByKeys) — both sides are ≤ 1 row per key, so the
@@ -1063,10 +1011,10 @@ object Ivm {
         val keyCols = groupExprs.zip(keyNames).map { case (e, n) =>
           strip(e).as(n)
         }
-        val touched = pinSmall(
+        val touched = Pins.pin(
           childSd.inserts.select(keyCols: _*)
             .unionByName(childSd.retracts.select(keyCols: _*))
-            .distinct())
+            .distinct(), "ivm:pin")
         val affOf = () => reMint(touched.select(keyNames.map(k =>
           col(k).as(s"__aff_$k")): _*))
 
@@ -1217,9 +1165,9 @@ object Ivm {
         val oBase = if (oHasDelta) baseOf(oDf) else oDf
         // referenced up to twice (insert + retract arms of the Signed
         // case) and |groups|-sized — pin once
-        lazy val aFull = pinSmall(sideFs.foldLeft(
+        lazy val aFull = Pins.pin(sideFs.foldLeft(
           IvmAgg.merge(baseOf(aggDf), IvmAgg.deltaPartial(aggDf)))(
-          (d, f) => f(d)))
+          (d, f) => f(d)), "ivm:pin")
         // the other side's own step, three ways: STATIC (no registered
         // source below it — the A'⋈δB term vanishes), INSERT-ONLY (the
         // envelope rewrite applies — one extra insert arm), or SIGNED

@@ -3,7 +3,7 @@ package graft.ivm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
-import graft.engine.Labeled
+import graft.engine.{Labeled, Pins}
 import graft.sources.ChangeWindow
 
 /** The maintenance shared by the lakehouse seams
@@ -54,12 +54,10 @@ private[ivm] object LakeSplice {
       window: ChangeWindow): DataFrame =
     if (window.neutral) view
     else if (window.changesOutweighSnapshot)
-      Labeled.job(view.sparkSession, "splice:recompute") {
-        // the splice with every group touched: nothing of the view is
-        // kept, and the union only fixes the view's column order
-        view.limit(0).unionByName(agg(prep(window.snapshot)))
-          .localCheckpoint()
-      }
+      // the splice with every group touched: nothing of the view is kept,
+      // and the union only fixes the view's column order
+      Pins.pin(view.limit(0).unionByName(agg(prep(window.snapshot))),
+        "splice:recompute", eager = true)
     else splice(view, keys, agg, prep(window.changes.inserts),
       prep(window.changes.retracts), prep(window.snapshot))
 
@@ -107,18 +105,13 @@ private[ivm] object LakeSplice {
         // but under AQE building it still runs the distinct's
         // shuffle-stage job; only its final stage waits for the first
         // broadcast build
-        val pinned = Labeled.job(spark, "splice:touched-pin") {
-          touched.localCheckpoint(false)
-        }
-        val tRen = pinned.select(
+        val tRen = Pins.pin(touched, "splice:touched-pin").select(
           keys.map(k => col(k).as(s"__touched_$k")): _*)
         val cond = keys.map(k => col(k) <=> col(s"__touched_$k"))
           .reduce(_ && _)
         (view.join(broadcast(tRen), cond, "left_anti"),
           agg(snapshot.join(broadcast(tRen), cond, "left_semi")))
     }
-    Labeled.job(spark, "splice:view-pin") {
-      kept.unionByName(repaired).localCheckpoint()
-    }
+    Pins.pin(kept.unionByName(repaired), "splice:view-pin", eager = true)
   }
 }

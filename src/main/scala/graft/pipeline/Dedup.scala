@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Par, QueryDef, Tables}
+import graft.engine.{Par, Pins, QueryDef, Tables}
 
 /** Near-duplicate detection for an LLM-training-data corpus: MinHash+LSH,
   * SimHash, and exact n-gram Jaccard — the standard web-scale dedup ladder
@@ -28,33 +28,6 @@ import graft.engine.{Par, QueryDef, Tables}
   * on fixed-width hex digests is order-isomorphic to min-over-ints.
   */
 object Dedup {
-
-  /** Pin the SIGNATURE table once per maintenance cycle (optimization
-    * guide §1.2/§2.1): the delta rewrite's 3-arm band-join expansion
-    * references the signature view up to six times (two sides × three
-    * arms), and since the δ/base predicates push below the signature
-    * aggregate, no two occurrences share a subplan — each re-runs the
-    * shingle scan + 6-hash aggregate, ~2.2 corpus-equivalents of
-    * redundant work per cycle. Pinning evaluates the pipeline ONCE; the
-    * arms filter the materialized rows. This is also the scale-true
-    * shape: a production pipeline STORES the signature table
-    * (delta_minhash maintains it) rather than re-deriving it per arm,
-    * and the pinned frame is |docs| × 6 digests — far smaller than the
-    * corpus text it replaces re-scans of. Gated on the same conf as the
-    * signed-rung pins so tests/Explain can audit the lazy algebra
-    * (constraint normalization per [[graft.ivm.Ivm]]'s pin: the
-    * checkpointed leaf is cloned into a Union by the rewrite).
-    */
-  private def pinSigView(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.ivm.pinSignedNet", "true").toBoolean)
-      // lazy checkpoint: same LogicalRDD plan-cut, no standalone pin job
-      // (see Ivm.pinSmall's rationale)
-      graft.engine.Labeled.job(df.sparkSession, "pipeline:sig-pin") {
-        org.apache.spark.sql.graft.GraftSql
-          .normalizeRddConstraints(df.localCheckpoint(false))
-      }
-    else df
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -352,20 +325,19 @@ object Dedup {
     // round 0 fused into initialization: label = min(self, direct
     // neighbors) — one aggregation replaces the distinct AND the first
     // propagation round (plus its convergence check).
-    // Each round's frame is a localCheckpoint, not persist: the label
-    // frame is referenced THREE times per round (self, neighbor-min,
-    // pointer lookup), so a cached lineage would grow 3^rounds plan nodes
-    // — checkpointing truncates to a LogicalRDD and keeps the per-round
-    // plan (and codegen time) constant. The checkpoints are LAZY: under
-    // AQE building one runs the round's shuffle stages, and the round's
-    // convergence check (a full-frame aggregate) runs the final stage and
-    // caches the blocks — an eager pin's standalone job per round was a
-    // pure extra barrier. Superseded rounds' blocks are dropped by
-    // `unpinNow` as soon as the next round is materialized.
-    var labels = edges.groupBy(col("a"))
+    // Each round's frame is a pin, not persist: the label frame is
+    // referenced THREE times per round (self, neighbor-min, pointer
+    // lookup), so a cached lineage would grow 3^rounds plan nodes — the
+    // pin truncates to a LogicalRDD and keeps the per-round plan (and
+    // codegen time) constant. The pins are LAZY: under AQE building one
+    // runs the round's shuffle stages, and the round's convergence check
+    // (a full-frame aggregate) runs the final stage and caches the blocks
+    // — an eager pin's standalone job per round was a pure extra barrier.
+    // Superseded rounds are released as soon as the next round is
+    // materialized.
+    var labels = Pins.pin(edges.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("label"))
-      .select(col("a").as("id"), col("label"))
-      .localCheckpoint(false)
+      .select(col("a").as("id"), col("label")), "pipeline:cc-round")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -398,12 +370,11 @@ object Dedup {
             .as("nm"))
       val gm = nm.groupBy(col("label").as("gl")).agg(min(col("nm")).as("gm"))
       val merged = least(col("nm"), coalesce(col("gm"), col("nm")))
-      val next = nm
+      val next = Pins.pin(nm
         .join(gm, nm("label") === gm("gl"), "left")
         .select(nm("id"), merged.as("label"),
-          (merged < nm("label")).cast("long").as("chg"))
-        .localCheckpoint(false)
-      // the convergence check MATERIALIZES the lazy checkpoint (it reads
+          (merged < nm("label")).cast("long").as("chg")), "pipeline:cc-round")
+      // the convergence check MATERIALIZES the lazy pin (it reads
       // every partition, so the round's one aggregate job is also the pin
       // job). sum over an EMPTY frame is NULL, not 0 — an empty pair
       // graph must converge, not NPE
@@ -414,7 +385,7 @@ object Dedup {
       // drop them NOW instead of waiting for GC + ContextCleaner, which
       // let dead round frames pile up across a multi-round run (the
       // recurring dedup_survivors warm-pass variance)
-      org.apache.spark.sql.graft.GraftSql.unpinNow(labels)
+      Pins.release(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -428,14 +399,14 @@ object Dedup {
           "pair graph has a longer chain than expected; raise maxIter")
     }
     // the final round's frame is ALREADY materialized (its lazy
-    // checkpoint was filled by the last convergence check) — returning
+    // pin was filled by the last convergence check) — returning
     // it directly avoids a second cached copy. (The previous extra
     // persist() was a per-execution block leak for callers that never
     // unpersist — e.g. the declared query run
     // repeatedly by the bench — and showed up as multi-second run-to-run
-    // variance while the ContextCleaner caught up. Checkpoint blocks are
+    // variance while the ContextCleaner caught up. Pin blocks are
     // freed when the frame is garbage-collected, same as every other
-    // localCheckpoint in the engine; a caller's unpersist() is a no-op.)
+    // pin in the engine; a caller's unpersist() is a no-op.)
     (labels.drop("chg"), iter)
   }
 
@@ -517,21 +488,21 @@ object Dedup {
     */
   def incrementalSurvivors(baseLabels: DataFrame,
       newPairs: DataFrame): DataFrame = {
-    // Pin the |δ|-sized inputs ONCE (same idiom as Ivm's pinSmall): the
+    // Pin the |δ|-sized inputs ONCE (same idiom as Ivm's rungs): the
     // new-pair frame feeds `ends`, the contraction, and (through `rel`)
     // both remap arms, and a caller's lazy lineage — e.g. the full
     // δ-candidate + Jaccard pipeline in `delta_survivors` — would
     // otherwise re-execute at EVERY reuse, including once per micro-CC
     // round (measured 67s warm vs ~3s pinned at sf0.1).
-    val np = newPairs.localCheckpoint(false)
+    val np = Pins.pin(newPairs, "pipeline:survivors-pin")
     val ends = np.select(col("d1").as("id"))
       .union(np.select(col("d2").as("id"))).distinct()
     // stored rows for touched endpoints only — |δ|-sized by construction;
     // pinned for the same reason (read by l1, l2, and the entrant anti).
     // Both pins lazy: computed once inside their first consumer's job
-    // instead of two standalone barrier jobs (see Ivm.pinSmall)
-    val rel = baseLabels.join(broadcast(ends), Seq("id"), "left_semi")
-      .localCheckpoint(false)
+    // instead of two standalone barrier jobs
+    val rel = Pins.pin(baseLabels.join(broadcast(ends), Seq("id"),
+      "left_semi"), "pipeline:survivors-pin")
     val l1 = rel.select(col("id").as("d1"), col("label").as("l1"))
     val l2 = rel.select(col("id").as("d2"), col("label").as("l2"))
     val contracted = np
@@ -692,7 +663,15 @@ object Dedup {
     QueryDef("delta_lsh_candidates",
       (s, d) => {
         import graft.ivm.{DeltaSources, Ivm}
-        pinSigView(signatures(t(s, d, "documents"), 6))
+        // the signature table is pinned once per maintenance cycle: the
+        // 3-arm band-join expansion references it up to six times, and
+        // since the δ/base predicates push below the signature aggregate
+        // no two occurrences share a subplan — unpinned, each re-runs the
+        // shingle scan + 6-hash aggregate (~2.2 corpus-equivalents of
+        // redundant work per cycle). It is also the scale-true shape: a
+        // production pipeline STORES the signature table (delta_minhash
+        // maintains it), |docs| × 6 digests
+        Pins.pin(signatures(t(s, d, "documents"), 6), "pipeline:sig-pin")
           .createOrReplaceTempView("sig_delta_src")
         DeltaSources.register("sig_delta_src", "doc_id % 10 = 0")
         Ivm.delta(candidatePairsRaw(s.table("sig_delta_src"), 3, 2))
@@ -757,7 +736,8 @@ object Dedup {
             .write.parquet(p)
         }
         val baseLabels = s.read.parquet(baseDir)
-        pinSigView(signatures(docs, 6))
+        // pinned once, as in delta_lsh_candidates
+        Pins.pin(signatures(docs, 6), "pipeline:sig-pin")
           .createOrReplaceTempView("surv_sig_src")
         DeltaSources.register("surv_sig_src", "doc_id % 10 = 0")
         // pinned once: the δ-candidate plan (3-arm band join over the
@@ -765,9 +745,9 @@ object Dedup {
         // evaluations inside jaccardVerify) and the verify's cand side —
         // |δ-candidates|-sized, so the pin is cheap and saves ~4 full
         // signature rebuilds
-        val newCand = Ivm.delta(
-          candidatePairsRaw(s.table("surv_sig_src"), 3, 2)).distinct()
-          .localCheckpoint(false)
+        val newCand = Pins.pin(Ivm.delta(
+          candidatePairsRaw(s.table("surv_sig_src"), 3, 2)).distinct(),
+          "pipeline:candidates-pin")
         val ends = newCand.select(col("d1").as("doc_id"))
           .union(newCand.select(col("d2").as("doc_id"))).distinct()
         val ws = shingleRows(
@@ -798,7 +778,7 @@ object Dedup {
 
     // MAINTAINED decontamination gate — the incremental form a pipeline
     // runs as crawl snapshots land: the benchmark shingle set is
-    // MATERIALIZED once (localCheckpoint → a static leaf whose delta is
+    // MATERIALIZED once (a pin → a static leaf whose delta is
     // empty under the static-table rule), so the δ rewrite reduces
     // δ(train ⋈ benchSet) to δtrain ⋈ benchSet — the cycle shingles ONLY
     // appended training docs against the stored set and upserts |δ docs|
@@ -813,8 +793,9 @@ object Dedup {
       (s, d) => {
         import graft.ivm.{DeltaSources, IvmAgg}
         val docs = t(s, d, "documents")
-        val benchSet = shingleRows(docs.filter(col("doc_id") % 10 === 3))
-          .select("s").distinct().localCheckpoint(false)
+        val benchSet = Pins.pin(
+          shingleRows(docs.filter(col("doc_id") % 10 === 3))
+            .select("s").distinct(), "pipeline:bench-set-pin")
         val train = docs.filter(col("doc_id") % 10 =!= 3)
         val q = (tr: DataFrame) => shingleRows(tr).join(benchSet, "s")
           .groupBy("doc_id").agg(count(lit(1)).as("overlap"))

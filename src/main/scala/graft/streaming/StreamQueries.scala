@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{Pins, QueryDef, Tables}
 
 /** Declared queries executed through the Structured Streaming RUNTIME — the
   * streaming twins (SURVEY §2E/§2G/§2I) pinned against the DuckDB oracle
@@ -55,7 +55,7 @@ object StreamQueries {
       Seq(s"$sfDir/events.parquet"))(write)
 
   /** Run one replay and hand back the final sink generation, PINNED
-    * (eager localCheckpoint — the frame is aggregate-sized) so the per-run
+    * (eager pin — the frame is aggregate-sized) so the per-run
     * checkpoint dir can be deleted immediately instead of accumulating
     * under /tmp. `complete` mode keeps the LAST generation (= the
     * maintained view); `append` mode accumulates emissions across batches
@@ -92,14 +92,13 @@ object StreamQueries {
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         // batches arrive sequentially (one micro-batch at a time), but
-        // synchronize anyway; complete mode drops the superseded
-        // generation reference (blocks reclaimed by the ContextCleaner)
-        val pinned = b.localCheckpoint(true)
+        // synchronize anyway
+        val pinned = Pins.pin(b, "stream:generation-pin", eager = true)
         gens.synchronized {
           if (mode == "complete") {
-            // superseded generations are never read again — drop their
-            // checkpoint blocks now instead of waiting for the cleaner
-            gens.foreach(org.apache.spark.sql.graft.GraftSql.unpinNow)
+            // superseded generations are never read again — release them
+            // now instead of waiting for the ContextCleaner
+            gens.foreach(Pins.release)
             gens.clear()
           }
           gens += pinned
@@ -401,13 +400,12 @@ object StreamQueries {
           .trigger(Trigger.AvailableNow())
           .start(dest)
         q.awaitTermination()
-        val out = graft.sources.DeltaLake.snapshot(s, dest)
+        val out = Pins.pin(graft.sources.DeltaLake.snapshot(s, dest)
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("cnt"),
             sum(col("o_totalprice").cast(DecimalType(18, 2)))
               .cast("double").as("total"))
-          .orderBy("o_orderpriority")
-          .localCheckpoint(true)
+          .orderBy("o_orderpriority"), "stream:result-pin", eager = true)
         deleteRec(work)
         out
       },
@@ -441,13 +439,12 @@ object StreamQueries {
           .trigger(Trigger.AvailableNow())
           .start(dest)
         q.awaitTermination()
-        val out = graft.sources.Iceberg.snapshot(s, dest)
+        val out = Pins.pin(graft.sources.Iceberg.snapshot(s, dest)
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("cnt"),
             sum(col("o_totalprice").cast(DecimalType(18, 2)))
               .cast("double").as("total"))
-          .orderBy("o_orderpriority")
-          .localCheckpoint(true)
+          .orderBy("o_orderpriority"), "stream:result-pin", eager = true)
         deleteRec(work)
         out
       },

@@ -3,11 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import graft.engine.Pins
 
 /** Plan-inspection tool: `runMain graft.tools.Explain <sfDir> <query...>`
   * prints the formatted physical plan of each named query (all queries if
-  * none named). Used to audit pushdown / pruning / join strategy per the
-  * design-for-scale loop.
+  * none named), then the plan of every pin built while the query's frame
+  * was constructed — the executed form, whose pinned subtrees show in the
+  * query's own plan only as RDD scans. Used to audit pushdown / pruning /
+  * join strategy per the design-for-scale loop.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -22,19 +25,17 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // show the LAZY maintenance plans (signed-rung pinning would execute
-    // the interesting subtrees at construction and print RDD scans) —
-    // unless SPARK_GRAFT_EXPLAIN_PINNED=1 asks for the PINNED execution
-    // path (what the bench actually runs: pinned frames appear as
-    // ExistingRDD leaves, showing how many subplan repetitions a pin
-    // collapses)
-    if (!sys.env.get("SPARK_GRAFT_EXPLAIN_PINNED").contains("1"))
-      spark.conf.set("spark.graft.ivm.pinSignedNet", "false")
     graft.engine.Tables.init(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: $e") }
+      try {
+        val (df, pins) =
+          Pins.plansDuring(spark)(SparkEntry.queries(n)(spark, sfDir))
+        df.explain("formatted")
+        pins.zipWithIndex.foreach { case (p, i) =>
+          println(s"---------- pin ${i + 1} of ${pins.size} ----------\n$p")
+        }
+      } catch { case e: Throwable => println(s"EXPLAIN FAILED: $e") }
     }
     spark.stop()
   }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.Pins
+
 /** Scale probe for the lakehouse readers (dev tool, NOT part of the
   * declared surface) — the r9 regression harness for the log-backed
   * single-scan snapshot: stages a ~100-partition / ~1k-file Delta table
@@ -195,14 +197,15 @@ object LakeReaderProbe {
           .as("total"))
     graft.ivm.DeltaLakeSnapshots.track(spark, "probe_cycle", delTable,
       at = Some(0L))
-    val stored = aggOf(dl.snapshot(spark, delTable, Some(0L)))
-      .localCheckpoint()
+    val stored = Pins.pin(aggOf(dl.snapshot(spark, delTable, Some(0L))),
+      "probe:stored-view", eager = true)
     val t0 = System.nanoTime()
     val maintained = graft.ivm.DeltaLakeSnapshots.maintainAgg(spark,
       "probe_cycle", stored, Seq("pk"), aggOf)
     val cycleS = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val full = aggOf(dl.snapshot(spark, delTable)).localCheckpoint()
+    val full = Pins.pin(aggOf(dl.snapshot(spark, delTable)),
+      "probe:recompute", eager = true)
     val fullS = (System.nanoTime() - t1) / 1e9
     if (maintained.orderBy("pk").collect().toSeq !=
         full.orderBy("pk").collect().toSeq) {

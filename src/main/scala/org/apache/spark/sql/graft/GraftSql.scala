@@ -57,20 +57,22 @@ object GraftSql {
   def analyze(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
     spark.sessionState.analyzer.execute(plan)
 
-  /** Synchronously drop a checkpointed frame's cached blocks (guide §5 —
-    * unpersist when done). A localCheckpoint frame's blocks are otherwise
-    * reclaimed only when the ContextCleaner notices the RDD is
-    * garbage-collected, so an iterative loop that supersedes a pinned
-    * frame per round accumulates dead blocks between GCs — measured as
-    * multi-second warm-pass variance on the CC-loop queries. ONLY safe on
-    * frames that are never read again: a truncated checkpoint RDD cannot
-    * recompute evicted blocks.
+  /** Drop a checkpoint leaf's cached blocks (see `graft.engine.Pins.release`)
+    * through `SparkContext.unpersistRDD`: `RDD.unpersist` would log a WARN
+    * that a locally checkpointed RDD cannot be recomputed, once per
+    * release, for a frame the caller never reads again.
     */
-  def unpinNow(df: DataFrame): Unit = analyzed(df) match {
+  def dropCheckpointBlocks(df: DataFrame): Unit = analyzed(df) match {
     case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false); ()
+      df.sparkSession.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
     case _ => ()
   }
+
+  /** Block until every event posted so far has reached every listener
+    * (the listener bus is `private[spark]`).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Re-home a checkpoint-produced [[LogicalRDD]]'s constraints onto its
     * own output attributes.

@@ -1,25 +1,33 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.classic
+import org.apache.spark.sql.{classic, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the perf-critical physical-plan shapes (the `.explain` audits the
-  * builder brief asks for, as assertions): pushdown reaching parquet,
-  * broadcast join selection, no CodegenFallback in similarity hot paths,
-  * single-scan star joins. A regression here is a scale bug even when
-  * results stay correct.
+import graft.engine.Pins
+
+/** Pins the perf-critical physical-plan shapes (the `.explain` audits, as
+  * assertions): pushdown reaching parquet, broadcast join selection, no
+  * CodegenFallback in similarity hot paths, single-scan star joins. A
+  * regression here is a scale bug even when results stay correct.
+  *
+  * The audit covers the EXECUTED form: a query's own physical plan plus
+  * the plan of every pin ([[graft.engine.Pins]]) built while its frame is
+  * constructed — a pinned subtree shows in the query's plan only as an RDD
+  * scan. Presence and absence checks read every plan ([[Executed.all]]);
+  * counts read one plan each, the query's ([[Executed.query]]) unless the
+  * counted subtree is pinned.
   */
 class PlanAuditSpec extends AnyFunSuite with SparkFixture {
 
-  // audit the LAZY maintenance plans: signed-rung pinning (eager
-  // localCheckpoint of delta-sized frames, the default) executes the
-  // interesting subtrees at construction time and leaves only RDD
-  // scans to inspect
-  private def lazyPlans[A](body: => A): A = {
-    spark.conf.set("spark.graft.ivm.pinSignedNet", "false")
-    try body
-    finally spark.conf.unset("spark.graft.ivm.pinSignedNet")
+  /** A frame's physical plan and the plans of the pins built with it. */
+  private final class Executed(val query: String, val pins: Seq[String]) {
+    val all: String = (query +: pins).mkString("\n")
+  }
+
+  private def executed(build: => DataFrame): Executed = {
+    val (df, pins) = Pins.plansDuring(spark)(build)
+    new Executed(df.asInstanceOf[classic.Dataset[_]]
+      .queryExecution.executedPlan.toString, pins)
   }
 
   // AQE's query-stage wrappers hide scan nodes from collectLeaves;
@@ -31,28 +39,26 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  private def planOf(name: String): String = lazyPlans {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan.toString
-  }
+  private def planOf(name: String): Executed =
+    executed(SparkEntry.queries(name)(spark, sfDir))
 
   test("delta_scan: range delta predicate is pushed to the parquet scan") {
-    val p = planOf("delta_scan")
+    val p = planOf("delta_scan").all
     assert(p.contains("GreaterThanOrEqual(o_orderdate"),
       s"range pushdown missing:\n$p")
   }
 
   test("delta_union: delta predicate pushed in every union arm") {
-    val p = planOf("delta_union")
+    val p = planOf("delta_union").query
     val pushes = "GreaterThanOrEqual\\(o_orderdate".r.findAllIn(p).size
     assert(pushes >= 2, s"expected pushdown in both arms, got $pushes:\n$p")
   }
 
   test("delta_join: 3-arm union of broadcast joins") {
-    val p = planOf("delta_join")
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 3,
-      s"expected 3 broadcast arms:\n$p")
-    assert(p.contains("Union"), s"union missing:\n$p")
+    val e = planOf("delta_join")
+    assert("BroadcastHashJoin".r.findAllIn(e.query).size == 3,
+      s"expected 3 broadcast arms:\n${e.query}")
+    assert(e.all.contains("Union"), s"union missing:\n${e.all}")
   }
 
   test("delta_agg_join: broadcast keyed lookups, δ pruning, no product") {
@@ -60,7 +66,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // lookup and the δ-keys restriction plan as BROADCAST semi joins (the
     // delta-group set is small by design), every δ arm's range predicate
     // reaches the parquet scan, and nothing degenerates to a product
-    val p = planOf("delta_agg_join")
+    val p = planOf("delta_agg_join").all
     assert("BroadcastHashJoin .*LeftSemi".r.findFirstIn(p).nonEmpty,
       s"affected-key lookup must broadcast:\n$p")
     assert(p.contains("GreaterThanOrEqual(o_orderdate"),
@@ -74,9 +80,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // δ(fact ⋈ static dim) must reduce to δfact ⋈ dim: the dim's empty
     // delta arm (and the δ×δ arm) are pruned by PropagateEmptyRelation,
     // leaving exactly ONE parquet scan carrying the range predicate
-    val p = planOf("delta_static_dim")
-    assert("Scan parquet".r.findAllIn(p).size == 1,
-      s"expected exactly one fact scan (empty arms pruned):\n$p")
+    val e = planOf("delta_static_dim")
+    val p = e.all
+    assert("Scan parquet".r.findAllIn(e.query).size == 1,
+      s"expected exactly one fact scan (empty arms pruned):\n${e.query}")
     assert(p.contains("GreaterThanOrEqual(o_orderdate"),
       s"delta pruning missing from the fact scan:\n$p")
     assert(!p.contains("Union"),
@@ -89,9 +96,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // exactly TWO parquet scans — the base view's and the δ arm's — and
     // the base×δbench / δ×δ arms prune away; nothing degenerates to a
     // product and the corpus is never re-shingled in the cycle
-    val p = planOf("delta_decontaminate")
-    assert("Scan parquet".r.findAllIn(p).size == 2,
-      s"expected exactly two corpus scans (base view + delta arm):\n$p")
+    val e = planOf("delta_decontaminate")
+    val p = e.all
+    assert("Scan parquet".r.findAllIn(e.query).size == 2,
+      s"expected exactly two corpus scans (base view + delta arm):\n${e.query}")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"product join leaked into the maintained gate:\n$p")
@@ -100,7 +108,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   test("dedup_passage: digest-keyed passes, no product join") {
     // passage dedup must stay two linear corpus passes joined by digest
     // equality — any product join here is corpus-quadratic at scale
-    val p = planOf("dedup_passage")
+    val p = planOf("dedup_passage").all
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"product join leaked into passage dedup:\n$p")
@@ -111,7 +119,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // weighted re-aggregation: the affected-group view probe must
     // broadcast, the orders δ arms must carry the range predicate at the
     // scans, and no term may degenerate to a product
-    val p = planOf("delta_two_level")
+    val p = planOf("delta_two_level").all
     assert("BroadcastHashJoin .*LeftSemi".r.findFirstIn(p).nonEmpty,
       s"affected-group lookup must broadcast:\n$p")
     assert(p.contains("GreaterThanOrEqual(o_orderdate"),
@@ -128,24 +136,25 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // scan), and the stored-view side scans the base partition — no arm
     // scores base × base and δ × base together (that would be a full
     // re-rank, not maintenance)
-    val p = planOf("delta_ann_topk")
+    val p = planOf("delta_ann_topk").all
     assert(p.contains("vec_dot_scaled"), s"quantized scorer missing:\n$p")
     assert("% 10\\)".r.findAllIn(p).nonEmpty,
       s"delta split predicate missing from the maintenance arm:\n$p")
   }
 
   test("multi_join: star join broadcasts all three dims, scans fact once") {
-    val p = planOf("multi_join")
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 3,
-      s"expected 3 broadcast dim joins:\n$p")
-    assert("lineitem".r.findAllIn(p).size == 1,
-      s"fact table must be scanned exactly once:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"unexpected shuffle join:\n$p")
+    val e = planOf("multi_join")
+    assert("BroadcastHashJoin".r.findAllIn(e.query).size == 3,
+      s"expected 3 broadcast dim joins:\n${e.query}")
+    assert("lineitem".r.findAllIn(e.query).size == 1,
+      s"fact table must be scanned exactly once:\n${e.query}")
+    assert(!e.all.contains("SortMergeJoin"),
+      s"unexpected shuffle join:\n${e.all}")
   }
 
   test("similarity paths contain no CodegenFallback lambdas") {
     for (q <- Seq("similarity_topk", "ann_lsh", "neardup_embedding")) {
-      val p = planOf(q)
+      val p = planOf(q).all
       assert(!p.contains("zip_with") && !p.contains("aggregate(lambda"),
         s"$q fell back to interpreted HOFs:\n$p")
       assert(p.contains("vec_dot"), s"$q lost the native kernel:\n$p")
@@ -155,7 +164,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   test("PQ family: native encode kernel + no interpreted HOFs or UDFs " +
       "(r17)") {
     for (q <- Seq("ann_pq", "ann_ivfpq", "delta_pq_topk")) {
-      val p = planOf(q)
+      val p = planOf(q).all
       // encoding = per-subspace vec_near_cells_scaled; scoring = the
       // scaled native dot — both codegen'd Catalyst expressions
       assert(p.contains("vec_near_cells_scaled"),
@@ -170,7 +179,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ann_ivf: codegen'd quantizer kernel, no MLlib prediction UDF") {
-    val p = planOf("ann_ivf")
+    val p = planOf("ann_ivf").all
     assert(p.contains("vec_near_cells_scaled"),
       s"native IVF kernel missing:\n$p")
     assert(!p.toLowerCase.contains("batchevalpython") && !p.contains("UDF("),
@@ -181,11 +190,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // trigram generation must stay partition-local (WordShingles + explode):
     // no token-level Window, and the ONLY hash exchange in the whole query
     // is the per-document signature aggregation
-    val p = planOf("dedup_minhash")
+    val e = planOf("dedup_minhash")
+    val p = e.all
     assert(!p.contains("Window"), s"token-level window shuffle came back:\n$p")
     assert(p.contains("word_shingles"), s"native shingle kernel missing:\n$p")
-    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-      s"expected exactly the signature-agg exchange:\n$p")
+    assert("Exchange hashpartitioning".r.findAllIn(e.query).size == 1,
+      s"expected exactly the signature-agg exchange:\n${e.query}")
   }
 
   test("base-snapshot arm still reaches parquet pushdown with the null arm") {
@@ -202,9 +212,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   test("events_asof: merge-form as-of join shuffles exactly once by key") {
     // the carry-forward window is the ONLY hash exchange — the as-of match
     // must never become a per-row range probe or an interval cross join
-    val p = planOf("events_asof")
-    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-      s"expected the single by-key exchange:\n$p")
+    val e = planOf("events_asof")
+    val p = e.all
+    assert("Exchange hashpartitioning".r.findAllIn(e.query).size == 1,
+      s"expected the single by-key exchange:\n${e.query}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"as-of join degenerated to a product:\n$p")
   }
@@ -222,7 +233,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
       "scalar_subquery")                    // broadcast 1-row aggregate
     for (name <- SparkEntry.queries.keys.toSeq.sorted
          if !expectedProducts.contains(name)) {
-      val p = planOf(name)
+      val p = planOf(name).all
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"$name contains a product join:\n$p")
@@ -230,10 +241,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("delta_keyscoped: affected keys broadcast, delta filter pushed") {
-    // audited pre-checkpoint (the declared query pins correctness; this
-    // pins the SCALE shape): both window recomputes must semi-join against
-    // a BROADCAST affected-key set, and the key set's scan must push the
-    // delta range to parquet — that pruning is what makes the rung cheap
+    // audits the rung's frames, not the declared query built on them (that
+    // query pins correctness; this pins the SCALE shape): both window
+    // recomputes must semi-join against a BROADCAST affected-key set, and
+    // the key set's scan must push the delta range to parquet — that
+    // pruning is what makes the rung cheap
     import org.apache.spark.sql.functions.{col, sum => fsum}
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
@@ -245,13 +257,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     }
     val ev = graft.engine.Tables(spark, sfDir, "events")
       .select("user_id", "event_id", "ts", "value")
-    val p = lazyPlans {
-      val sd = graft.ivm.Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
-      sd.inserts.asInstanceOf[classic.Dataset[_]]
-        .queryExecution.executedPlan.toString
-    }
-    // an AQE plan string prints current + initial plan, so count >= 2
-    assert("BroadcastHashJoin .*LeftSemi".r.findAllIn(p).size >= 2,
+    val e = executed(
+      graft.ivm.Ivm.deltaKeyScoped(q, ev, Seq("user_id")).inserts)
+    val p = e.all
+    // both restrictions sit in the pinned net aggregation's plan
+    val semis = (e.query +: e.pins)
+      .map("BroadcastHashJoin .*LeftSemi".r.findAllIn(_).size).max
+    assert(semis >= 2,
       s"expected both restrictions as broadcast semi joins:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"restriction must not shuffle the corpus side:\n$p")
@@ -262,7 +274,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   test("range_join: bin-bucketed interval join stays an equi-key join") {
     // the BETWEEN theta join has no equality key and would plan as a
     // nested-loop product; binning must restore a hash-joinable key
-    val p = planOf("range_join")
+    val p = planOf("range_join").all
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
       s"interval join lost its equi-key form:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
@@ -270,27 +282,27 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("keywords: vocabulary df table broadcasts, no corpus-side SMJ") {
-    val p = planOf("keywords")
+    val p = planOf("keywords").all
     assert(p.contains("BroadcastHashJoin"), s"df join must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"corpus-side shuffle join:\n$p")
   }
 
   test("projection: scan reads only the projected columns") {
-    val p = planOf("projection")
+    val p = planOf("projection").all
     assert(p.contains("ReadSchema: struct<c_custkey:bigint,c_name:string>"),
       s"column pruning failed:\n$p")
   }
 
   test("filter: predicates are pushed to the lineitem scan") {
     // PushedFilters prints truncated; DataFilters carries the full list
-    val p = planOf("filter")
+    val p = planOf("filter").all
     assert(p.contains("GreaterThanOrEqual(l_quantity,30.0)") &&
       p.contains("= R)"),
       s"filter pushdown missing:\n$p")
   }
 
   test("sort_limit plans as TakeOrderedAndProject (no full sort)") {
-    val p = planOf("sort_limit")
+    val p = planOf("sort_limit").all
     assert(p.contains("TakeOrderedAndProject"), s"top-k plan missing:\n$p")
   }
 
@@ -298,9 +310,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // the exchange must carry |labels| dim-sized long buffers, not corpus
     // rows: a partial vec_sum_scaled below the shuffle is the whole point
     // of the TypedImperativeAggregate (vs posexplode's dim× amplification)
-    val p = planOf("embedding_centroids")
-    assert(p.contains("partial_vec_sum_scaled"),
-      s"map-side partial aggregation missing:\n$p")
+    val e = planOf("embedding_centroids")
+    val p = e.query
+    assert(e.all.contains("partial_vec_sum_scaled"),
+      s"map-side partial aggregation missing:\n${e.all}")
     // explain prints parents first: the posexplode Generate must sit ABOVE
     // (print before) the aggregate, i.e. explode the |labels|-row result,
     // never the corpus
@@ -313,7 +326,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // against the (|new edges|-sized) micro-CC labels: every join in the
     // plan must build a broadcast side — a SortMergeJoin here would
     // shuffle the whole survivor view once per maintenance cycle
-    val p = planOf("delta_survivors")
+    val p = planOf("delta_survivors").all
     assert(p.contains("BroadcastHashJoin"), s"no broadcast remap:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"stored view shuffled in the remap path:\n$p")
@@ -329,13 +342,14 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // declared query's total-order range sort — a HASH exchange (join or
     // aggregate shuffle) or a fallback out of codegen would break the
     // embarrassingly parallel shape that makes redaction free at 100 TB
-    val p = planOf("pii_scrub")
-    assert("Scan parquet".r.findAllIn(p).size == 1,
-      s"expected exactly one events scan:\n$p")
+    val e = planOf("pii_scrub")
+    val p = e.all
+    assert("Scan parquet".r.findAllIn(e.query).size == 1,
+      s"expected exactly one events scan:\n${e.query}")
     assert(!p.contains("Exchange hashpartitioning"),
       s"unexpected keyed shuffle in a pure projection:\n$p")
-    assert("Exchange rangepartitioning".r.findAllIn(p).size <= 1,
-      s"more than the final total-order sort:\n$p")
+    assert("Exchange rangepartitioning".r.findAllIn(e.query).size <= 1,
+      s"more than the final total-order sort:\n${e.query}")
     assert(!p.contains("CodegenFallback"),
       s"regex projection fell out of codegen:\n$p")
   }
@@ -343,12 +357,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   test("join_salted: salt spreads the fact side, result plan stays keyed") {
     // the salted join must remain a hash equi-join on (key, salt) — no
     // product — and the replicated small side must come from ONE part scan
-    val p = planOf("join_salted")
+    val e = planOf("join_salted")
+    val p = e.all
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"salting degenerated to a product join:\n$p")
-    assert("part.parquet".r.findAllIn(p).size <= 1,
-      s"small side must be scanned once and replicated by explode:\n$p")
+    assert("part.parquet".r.findAllIn(e.query).size <= 1,
+      s"small side must be scanned once and replicated by explode:\n${e.query}")
   }
 
   test("delta_lsh_candidates: no arm re-joins base x base") {
@@ -356,11 +371,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // every band join has a DELTA side; the corpus-quadratic base×base
     // join must appear in no arm (and no LeftAnti fallback to the generic
     // δ∖base distinct interception, which would recompute it)
-    val p = planOf("delta_lsh_candidates")
+    val e = planOf("delta_lsh_candidates")
+    val p = e.all
     val joins = "SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin".r
-      .findAllIn(p).size
-    assert(joins == 3,
-      s"expected exactly the 3 delta-involving band-join arms, got $joins:\n$p")
+      .findAllIn(e.query).size
+    assert(joins == 3, "expected exactly the 3 delta-involving band-join " +
+      s"arms, got $joins:\n${e.query}")
     assert(!p.contains("LeftAnti"),
       s"generic distinct interception (base recompute) came back:\n$p")
     assert(p.contains("word_shingles"), s"native shingle kernel missing:\n$p")
@@ -371,7 +387,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // columnar reader takes predicates to stripe/row-group stats — the
     // value filter must appear as a pushed filter on the scan, not as a
     // post-scan Filter only
-    val p = planOf("events_orc")
+    val p = planOf("events_orc").all
     assert(p.contains("Scan orc"), s"expected an ORC scan:\n$p")
     assert("PushedFilters: \\[[^\\]]*GreaterThan\\(value".r
       .findFirstIn(p).nonEmpty,
@@ -535,8 +551,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // bucket metadata was lost (e.g. the session read raw parquet
     // instead of the registered table) and the fact side re-shuffles on
     // every join at scale.
-    val p = planOf("join_bucketed")
-    assert(p.contains("SortMergeJoin"), s"merge join missing:\n$p")
+    val e = planOf("join_bucketed")
+    val p = e.query
+    assert(e.all.contains("SortMergeJoin"), s"merge join missing:\n${e.all}")
     assert("Bucketed: true".r.findAllIn(p).size == 2,
       s"both sides must scan as bucketed tables:\n$p")
     assert("Exchange".r.findAllIn(p).size <= 2,
@@ -544,9 +561,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("deltalake_dv_scan: one scan, codegen'd DV anti-filter, no join") {
-    val p = planOf("deltalake_dv_scan")
-    assert("Scan parquet".r.findAllIn(p).size == 1,
-      s"a DV snapshot must stay ONE scan:\n$p")
+    val e = planOf("deltalake_dv_scan")
+    val p = e.all
+    assert("Scan parquet".r.findAllIn(e.query).size == 1,
+      s"a DV snapshot must stay ONE scan:\n${e.query}")
     assert(p.contains("DvKeep") || p.contains("dvLookup") ||
       !p.contains("Join"),
       s"DV application must be a filter, not a join:\n$p")
@@ -555,7 +573,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("iceberg_mor_scan: positional deletes apply as BROADCAST anti-join") {
-    val p = planOf("iceberg_mor_scan")
+    val p = planOf("iceberg_mor_scan").all
     assert(p.contains("LeftAnti"),
       s"MoR subtraction must be an anti-join:\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoop"),
@@ -565,7 +583,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("iceberg_eq_delete: sequence-scoped anti-join, broadcast only") {
-    val p = planOf("iceberg_eq_delete")
+    val p = planOf("iceberg_eq_delete").all
     assert(p.contains("LeftAnti"), s"equality subtract is an anti-join:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"equality deletes are metadata-sized — no data shuffle:\n$p")

@@ -4,10 +4,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, sum}
+import org.apache.spark.sql.graft.GraftSql
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -58,7 +58,7 @@ class LakeSpliceSpec extends AnyFunSuite with SparkFixture {
   /** The job descriptions of every Spark job `body` runs. */
   private def jobsOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
+    GraftSql.drainListenerBus(sc)
     val seen = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -69,7 +69,7 @@ class LakeSpliceSpec extends AnyFunSuite with SparkFixture {
     sc.addSparkListener(listener)
     try {
       val out = body
-      GraftTestBus.drain(sc)
+      GraftSql.drainListenerBus(sc)
       (out, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
